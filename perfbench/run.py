@@ -6,8 +6,8 @@
     python3 perfbench/run.py --selftest
 
 Builds the program from source first (see build.py), then runs one JVM:
-Spark in local mode with one worker thread per core (at most 8), driven
-by perfbench.Main. The JVM's standard output is relayed; its last line
+Spark in local mode with one worker thread per two cores (at most 4),
+driven by perfbench.Main. The JVM's standard output is relayed; its last line
 is the JSON result. Spark's log goes to perfbench/out/<workload>.log.
 Everything the run writes stays under perfbench/target and perfbench/out.
 """
@@ -33,18 +33,22 @@ ADD_OPENS = [f"--add-opens=java.base/{p}=ALL-UNNAMED" for p in (
 
 
 def cores():
+    """Spark worker threads: half the cores the process may use (1 to 4).
+    The other half keeps the driver thread, the JIT compiler and the GC
+    off the workers' cores, so a shared host's load moves the timings
+    less."""
     try:
         n = len(os.sched_getaffinity(0))
     except AttributeError:
         n = os.cpu_count() or 1
-    return max(1, min(n, 8))
+    return max(1, min(n // 2, 4))
 
 
 def java_cmd(main, args):
     tmp = os.path.join(OUT, "tmp")
     os.makedirs(tmp, exist_ok=True)
     return (["java"] + ADD_OPENS +
-            ["-Xmx3g", "-Xss4m", "-XX:+UseParallelGC", "-XX:-UsePerfData",
+            ["-Xms2g", "-Xmx2g", "-Xss4m", "-XX:+UseParallelGC", "-XX:-UsePerfData",
              "-Djava.io.tmpdir=" + tmp,
              "-Dlog4j2.configurationFile=" + os.path.join(HERE, "log4j2.properties"),
              "-Dspark.ui.enabled=false",

@@ -65,7 +65,8 @@ object Main {
       val tracer = new Tracer(traced, spark)
       val life = new Lifecycle(spark, shape, seed, tracer, work, cores)
       val setups = Seq.fill(Settings.SetupReps)(life.setUp())
-      val setupS = sessionS + Stats.median(setups)
+      val warmS = life.warmUp()
+      val setupS = sessionS + Stats.median(setups) + warmS
       val rounds = shape.rounds(seconds)
       val tRun = System.nanoTime()
       life.run(rounds)
@@ -73,9 +74,14 @@ object Main {
       val (e2e, tail) = EndToEnd.metrics(life, setupS)
 
       println(f"perfbench ${shape.name} seed=$seed rounds=$rounds cores=$cores " +
-        f"measured=${runS}%.2fs traced=$traced")
+        f"session=${sessionS}%.2fs setups=${setups.map(s => f"$s%.2f").mkString(",")}s " +
+        f"warmup=${warmS}%.2fs measured=${runS}%.2fs " +
+        f"rounds=${life.roundSeconds.map(s => f"$s%.2f").mkString(",")}s traced=$traced")
       println(f"query_tail_ms is p${tail.percentile}%.1f of n=${tail.n} single queries")
       e2e.foreach(m => println(f"  ${m.name}%-28s ${m.value}%14.4f ${m.unit}"))
+      life.samples.foreach { case (k, v) =>
+        println(s"  samples $k: ${v.map(x => f"$x%.3f").mkString(" ")}")
+      }
       life.problems.foreach(p => println(s"  FAILED $p"))
       println(s"  error_rate ${life.failed}/${life.attempted}")
 
@@ -89,7 +95,7 @@ object Main {
           val joinPairs = counters.find(_.name == "index.IVFFlat.knnJoin.pairs_scored").get.value
           val (files, bytes) = life.ivfSave.get
           val fromTrace = layers.fromTrace(log, files, bytes, joinPairs)
-          val perLayer = Catalog.PerLayer.map(n => (micro ++ counters ++ fromTrace)
+          val perLayer = Catalog.PerLayer.map(n => (micro ++ counters ++ fromTrace ++ EndToEnd.writePath(life))
             .find(_.name == n).getOrElse(sys.error(s"per-layer metric $n not measured")))
           writeArtifacts(out, shape.name, seed, log, e2e, perLayer, tail)
           perLayer
